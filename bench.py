@@ -216,19 +216,30 @@ def _time_section(
     return timings
 
 
+def _load_avg() -> float | None:
+    """1-minute load average, or None where the platform has none."""
+    try:
+        return round(os.getloadavg()[0], 2)
+    except (AttributeError, OSError):
+        return None
+
+
 def _wait_for_idle_box() -> None:
     """Load-aware pre-flight (VERDICT r10/r11): two consecutive driver
     windows ran on a contended box and the round-over-round comparison
     read as noise. If the 1-minute load average exceeds half the bench
     core count, sleep-retry for up to ~5 minutes, then proceed anyway —
     the bench must never hang the driver, only dodge transient load.
-    Additions-only: timing methodology and output contract unchanged."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
+    Without a load average there is nothing to wait on; a malformed
+    ``SPARK_GRAFT_CPUS`` falls back to ``os.cpu_count()``."""
+    from kafka_flink_spark.session import env_cpus
+
+    cpus = env_cpus() or os.cpu_count() or 8
     threshold = max(2.0, cpus / 2.0)
     deadline = time.monotonic() + 300
     while time.monotonic() < deadline:
-        load = os.getloadavg()[0]
-        if load <= threshold:
+        load = _load_avg()
+        if load is None or load <= threshold:
             return
         print(
             f"pre-flight: load {load:.1f} > {threshold:.1f}, waiting...",
@@ -242,7 +253,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     _wait_for_idle_box()
-    load_start = round(os.getloadavg()[0], 2)
+    load_start = _load_avg()
 
     # Throughput FIRST, in its own child process, before any other JVM
     # exists: measured in-bench rates were 50-81k ev/s vs 144k for the
@@ -372,7 +383,7 @@ def main() -> None:
                     "r8": min_total(r8_timings),
                     "stream": min_total(stream_timings),
                 },
-                "load_avg_1m": [load_start, round(os.getloadavg()[0], 2)],
+                "load_avg_1m": [load_start, _load_avg()],
             }
         )
     )
@@ -470,16 +481,9 @@ def _streaming_rate(spark) -> int:
             .parquet(f"{tmp}/src")
         )
 
-        # State-partition sizing: a streaming aggregation pays state-store
-        # open/commit overhead PER PARTITION PER MICRO-BATCH, so partition
-        # count should track key cardinality / cores, not the batch
-        # shuffle default. Measured on this 2k-key replay: 32 partitions
-        # 42k ev/s, 16 -> 64k, 8 -> 72k (see SCALING.md); production
-        # jobs size it to keys x throughput before first checkpoint
-        # (the count is fixed for the life of a checkpointed query).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-
+        # State-partition sizing (8 for this 2k-key replay; see
+        # SCALING.md) is run_available_now's job: it sets the count for
+        # the replay and restores the session value in ``finally``.
         def replay() -> None:
             stream = spark.readStream.schema(
                 "ts timestamp, product string, price double, qty long, seq long"
@@ -502,7 +506,6 @@ def _streaming_rate(spark) -> int:
             t0 = time.perf_counter()
             replay()
             rates.append(int(n / (time.perf_counter() - t0)))
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         return sorted(rates)[1]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

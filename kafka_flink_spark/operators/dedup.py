@@ -25,6 +25,17 @@ Scale design
   signatures per band key|, not |docs|, and a million identical copies
   contribute a single banding row instead of a quadratic hot key. The
   emitted pair set is unchanged (pathological-corpus test pins this).
+
+Shared steps
+------------
+Each step the near-dup family repeats has one implementation:
+``_verify_jaccard`` (exact-Jaccard verification of candidate pairs,
+owning both eager pins), ``_band_keys`` (MinHash LSH band keys),
+``simhash_chunks`` (validated pigeonhole chunk table, also used by
+streaming/dedup_stream), ``_shingle_overlap`` (inverted-index shingle
+join behind Jaccard and containment) and
+``_within_group_pairs`` (doc pairs inside one identical-signature
+group).
 """
 
 from __future__ import annotations
@@ -109,7 +120,6 @@ def minhash_signatures(
     col: str = "text",
     id_col: str = "doc_id",
     num_perms: int = NUM_PERMS,
-    fan_out: bool = True,
 ) -> DataFrame:
     """MinHash signature per document: each shingle is md5-hashed ONCE
     to a 60-bit value, and permutation ``p`` is the xor-bijection
@@ -133,16 +143,14 @@ def minhash_signatures(
     is still the min of a uniformly-distributed relabeling; candidate
     quality is guarded downstream by exact-Jaccard verification.
 
-    ``fan_out`` (default on) re-splits an under-partitioned input
-    first — a sub-splittable corpus file otherwise serializes the
-    whole md5 pass onto one core; see operators/partitioning.py. On an
-    already-parallel scan it is a no-op and the single-exchange plan
-    contract below holds exactly (plan-gated with fan_out=False).
+    An under-partitioned input is re-split first — a sub-splittable
+    corpus file otherwise serializes the whole md5 pass onto one core;
+    see operators/partitioning.py. On an already-split input that is a
+    no-op and the single-exchange plan contract holds exactly.
     """
-    if fan_out:
-        from kafka_flink_spark.operators.partitioning import fan_out_narrow
+    from kafka_flink_spark.operators.partitioning import fan_out_narrow
 
-        df = fan_out_narrow(df)
+    df = fan_out_narrow(df)
     hashed = df.select(
         F.col(id_col), F.explode(shingle_array(col)).alias("s")
     ).select(F.col(id_col), _md5_long_expr(F.col("s")).alias("h"))
@@ -156,6 +164,107 @@ def minhash_signatures(
     # (the array is already distinct, so count(*) == |shingle set|).
     aggs.append(F.count("*").alias("n_sh"))
     return hashed.groupBy(id_col).agg(*aggs)
+
+
+def _band_keys(num_perms: int, num_bands: int) -> Column:
+    """LSH band keys of a ``minhash_signatures`` row: band ``b`` joins
+    its ``num_perms // num_bands`` consecutive ``mh`` columns into one
+    string key (array position = band id)."""
+    rows_per_band = num_perms // num_bands
+    return F.array(
+        *[
+            F.concat_ws(
+                ":",
+                *[
+                    F.col(f"mh{b * rows_per_band + r}").cast("string")
+                    for r in range(rows_per_band)
+                ],
+            )
+            for b in range(num_bands)
+        ]
+    )
+
+
+def _within_group_pairs(
+    members: DataFrame, reps: DataFrame, group_col: str, id_col: str
+) -> DataFrame:
+    """Unordered (doc_a < doc_b) pairs of ``members`` rows sharing a
+    ``group_col`` value — identical signatures share every band/chunk,
+    so these are always candidates and are enumerated directly.
+
+    Restricted FIRST to groups that actually have >1 member (``reps``
+    carries the per-group ``_n`` count from its aggregation for free):
+    the restriction join's build side is the tiny dup-group list, so
+    the common no-duplicates corpus pays nothing here instead of a
+    corpus-wide self-join on the group key.
+    """
+    dup_groups = reps.filter(F.col("_n") > 1).select(group_col)
+    dup_members = members.join(dup_groups, group_col)
+    wa = dup_members.select(F.col(group_col), F.col(id_col).alias("_ida"))
+    wb = dup_members.select(F.col(group_col), F.col(id_col).alias("_idb"))
+    return (
+        wa.join(wb, group_col)
+        .filter(F.col("_ida") < F.col("_idb"))
+        .select(F.col("_ida").alias("doc_a"), F.col("_idb").alias("doc_b"))
+    )
+
+
+def _verify_jaccard(
+    docs: DataFrame,
+    cand: DataFrame,
+    left: str,
+    right: str,
+    min_jaccard: float,
+    col: str,
+    id_col: str,
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs: the rows of
+    ``cand`` (id columns ``left`` and ``right``, plus any payload)
+    whose two docs' distinct-shingle sets have Jaccard ≥
+    ``min_jaccard``, with a ``jaccard`` column appended.
+
+    Only docs that appear in a candidate are re-shingled: the semi
+    join is on the id column, so Catalyst defers the shingle
+    projection to after the filter, and both verification joins are
+    candidate-sized. Intersecting the two distinct-shingle arrays
+    gives the exact Jaccard of an exploded common-shingle count
+    without ever materializing an exploded relation.
+
+    Both pins are eager ``localCheckpoint``: ``cand`` feeds three
+    branches (both id sides and the verify join) and the re-shingled
+    docs feed both verify sides. A lazy persist there races
+    partition-level when one job reads it from several branches —
+    measured at the bench corpus, duplicate executions of the
+    candidate generator plus repeated re-analysis of its lineage cost
+    more than the one materialization job each pin pays. Candidate
+    pairs are orders of magnitude fewer than the corpus, so both pins
+    are small. Durability: executor-local blocks, acceptable because
+    both relations are cheap to rebuild relative to the query.
+    """
+    cand = cand.localCheckpoint()
+    cand_ids = (
+        cand.select(F.col(left).alias(id_col))
+        .unionByName(cand.select(F.col(right).alias(id_col)))
+        .distinct()
+    )
+    cand_sh = (
+        docs.join(cand_ids, id_col, "left_semi")
+        .select(F.col(id_col), shingle_array(col).alias("sh"))
+        .localCheckpoint()
+    )
+    sa = cand_sh.select(F.col(id_col).alias(left), F.col("sh").alias("sh_a"))
+    sb = cand_sh.select(F.col(id_col).alias(right), F.col("sh").alias("sh_b"))
+    common = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (
+        cand.join(sa, left)
+        .join(sb, right)
+        .withColumn(
+            "jaccard",
+            F.round(common / (F.size("sh_a") + F.size("sh_b") - common), 6),
+        )
+        .filter(F.col("jaccard") >= min_jaccard)
+        .drop("sh_a", "sh_b")
+    )
 
 
 def minhash_lsh_pairs(
@@ -179,7 +288,7 @@ def minhash_lsh_pairs(
     of bytes per doc per band. Verification then re-shingles ONLY the
     docs that appear in a candidate pair (a semi-join keeps the
     projection from running corpus-wide) and compares their distinct-
-    shingle arrays directly with array_intersect — the exact same
+    shingle arrays directly (``_verify_jaccard``) — the exact same
     Jaccard as an exploded common-shingle count, without ever
     materializing a corpus-sized exploded relation.
 
@@ -200,7 +309,6 @@ def minhash_lsh_pairs(
     relation, pre-partitioned exactly as the self-join needs, so the
     guard adds no corpus-sized exchange.
     """
-    rows_per_band = num_perms // num_bands
     sig_cols = [f"mh{p}" for p in range(num_perms)]
     # One fan-out decision for the whole operator: the signature pass
     # AND the verification re-shingle read the same raw relation, and
@@ -208,7 +316,7 @@ def minhash_lsh_pairs(
     from kafka_flink_spark.operators.partitioning import fan_out_narrow
 
     df = fan_out_narrow(df)
-    sigs = minhash_signatures(df, col, id_col, num_perms, fan_out=False)
+    sigs = minhash_signatures(df, col, id_col, num_perms)
     # --- bucket-size guard: collapse identical signatures -----------
     # A boilerplate mega-cluster (empty pages, license headers) puts
     # every copy in the SAME (band_id, band_key) bucket; self-joining
@@ -226,7 +334,7 @@ def minhash_lsh_pairs(
     # and (through them) every downstream join. EAGER localCheckpoint
     # (not a lazy persist): the final job reads it from 3+ branches
     # concurrently, and a lazy cache races partition-level — measured
-    # at the bench corpus (r12), up to 3x duplicate executions of the
+    # at the bench corpus, up to 3x duplicate executions of the
     # corpus-wide signature aggregation plus repeated Catalyst
     # re-analysis of the full lineage; pinning it once took the whole
     # pair path from 3.4s to 1.6s. num_perms+2 longs per doc: bounded.
@@ -239,13 +347,9 @@ def minhash_lsh_pairs(
     # and both expansion joins (narrow: id + 32-char fp per doc).
     members = sigs.select(F.col(id_col), "_gfp")
     # one representative row per distinct signature (map-side min over
-    # the pinned signatures); checkpointed because the banding
-    # self-join reads it from two aliases plus the dup-group filter
-    # (exchange reuse doesn't fire across aliased self-joins). Eager
-    # localCheckpoint over lazy persist: re-measured in r12, the lazy
-    # cache race + lineage re-analysis cost ~2x the extra
-    # materialization jobs (the r5-era "lazy wins" measurement did not
-    # hold at the current operator shape).
+    # the pinned signatures); pinned because the banding self-join
+    # reads it from two aliases plus the dup-group filter (exchange
+    # reuse doesn't fire across aliased self-joins).
     reps = (
         sigs.groupBy("_gfp")
         .agg(
@@ -255,20 +359,10 @@ def minhash_lsh_pairs(
         )
         .localCheckpoint()
     )
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                *[
-                    F.col(f"mh{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(num_bands)
-        ]
-    )
     banded = reps.select(
-        "_gfp", F.col("_rep"), F.posexplode(band_arr).alias("band_id", "band_key")
+        "_gfp",
+        F.col("_rep"),
+        F.posexplode(_band_keys(num_perms, num_bands)).alias("band_id", "band_key"),
     )
     if bucket_cap is not None:
         from pyspark.sql import Window
@@ -277,12 +371,9 @@ def minhash_lsh_pairs(
         # ONE window computes both the bucket size and the hub (min by
         # (_rep, _gfp) via struct ordering); its hash-by-bucket
         # partitioning is exactly what the self-join requires, so no
-        # additional corpus-sized exchange appears.
-        # The windowed relation feeds three consumers (both self-join
-        # sides + the star path); eager localCheckpoint so the window
-        # subplan runs once, not thrice (same r12 measurement as sigs/
-        # reps above). num_bands rows of a few longs per distinct
-        # signature — bounded.
+        # additional corpus-sized exchange appears. Pinned because it
+        # feeds three consumers (both self-join sides + the star path);
+        # num_bands rows of a few longs per distinct signature.
         banded = banded.select(
             "*",
             F.count("*").over(wspec).alias("_bn"),
@@ -323,75 +414,21 @@ def minhash_lsh_pairs(
             F.greatest("_ida", "_idb").alias("doc_b"),
         )
     )
-    # within-group doc pairs: identical signatures share every band —
-    # always candidates; enumerated directly (no banding amplification).
-    # Restricted FIRST to groups that actually have >1 member (the _n
-    # count rides on the reps aggregation for free): the restriction
-    # join's build side is the tiny dup-group list, so the common
-    # no-duplicates corpus pays nothing here instead of a corpus-wide
-    # self-join on the signature fingerprint.
-    dup_groups = reps.filter(F.col("_n") > 1).select("_gfp")
-    dup_members = members.join(dup_groups, "_gfp")
-    wa = dup_members.select(F.col("_gfp"), F.col(id_col).alias("_ida"))
-    wb = dup_members.select(F.col("_gfp"), F.col(id_col).alias("_idb"))
-    within = (
-        wa.join(wb, "_gfp")
-        .filter(F.col("_ida") < F.col("_idb"))
-        .select(F.col("_ida").alias("doc_a"), F.col("_idb").alias("doc_b"))
-    )
     # disjoint by construction (cross: different groups; within: same),
     # and each unordered pair appears exactly once — no dropDuplicates.
-    cand = cross.unionByName(within)
-    # cand feeds three branches (both id sides and the verify join);
-    # the eager pin stops the banding join from re-running per branch.
-    # Candidate pairs are orders of magnitude fewer than the corpus —
-    # near-identical docs are rare by mass — so this pin is tiny.
-    cand = cand.localCheckpoint()
-    # Exact-Jaccard verification over candidate docs only: the shingle
-    # arrays are recomputed just for ids surviving banding (the semi
-    # join is on the id column, so Catalyst defers the shingle
-    # projection to after the filter), and both verification joins are
-    # broadcast-sized.
-    cand_ids = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .unionByName(cand.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-    )
-    cand_sh = (
-        df.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col), shingle_array(col).alias("sh"))
-        .localCheckpoint()  # read by both verify sides (r12: eager pin)
-    )
-    sa = cand_sh.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = cand_sh.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(common / (F.size("sh_a") + F.size("sh_b") - common), 6),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "jaccard")
+    cand = cross.unionByName(_within_group_pairs(members, reps, "_gfp", id_col))
+    return _verify_jaccard(df, cand, "doc_a", "doc_b", min_jaccard, col, id_col).select(
+        "doc_a", "doc_b", "jaccard"
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    col: str = "text",
-    id_col: str = "doc_id",
-    min_jaccard: float = 0.2,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via a shingle inverted
-    index: explode distinct shingles, self-join on shingle, count
-    common shingles per pair, Jaccard = common / (|A|+|B|-common).
-
-    This is the exact baseline the LSH path approximates. At scale the
-    shingle join is the hot spot — standard mitigations (prefix
-    filtering, dropping ultra-frequent shingles) apply before the
-    join; fixture corpora don't need them.
-    """
+def _shingle_overlap(df: DataFrame, col: str, id_col: str) -> DataFrame:
+    """(doc_a < doc_b, na, nb, common, jaccard) for every doc pair
+    sharing at least one shingle — the shingle inverted-index
+    self-join: explode distinct shingles, self-join on shingle, count
+    common shingles per pair. ``na``/``nb`` are the two docs'
+    distinct-shingle counts, so any other resemblance ratio is column
+    algebra on top; Jaccard = common / (|A|+|B|-common)."""
     from pyspark.sql.window import Window
 
     sr = shingle_rows(df, col, id_col)
@@ -412,10 +449,27 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count("*").alias("common"))
     )
+    return common.withColumn(
+        "jaccard", F.round(F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6)
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    col: str = "text",
+    id_col: str = "doc_id",
+    min_jaccard: float = 0.2,
+) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs via a shingle inverted
+    index (``_shingle_overlap``).
+
+    This is the exact baseline the LSH path approximates. At scale the
+    shingle join is the hot spot — standard mitigations (prefix
+    filtering, dropping ultra-frequent shingles) apply before the
+    join; fixture corpora don't need them.
+    """
     return (
-        common.withColumn(
-            "jaccard", F.round(F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6)
-        )
+        _shingle_overlap(df, col, id_col)
         .filter(F.col("jaccard") >= min_jaccard)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -439,8 +493,8 @@ def ngram_jaccard_pairs_prefix(
     J ≥ τ: if two docs share no prefix element, every common shingle
     lies in both suffixes, so |A∩B| ≤ ⌈τ·|A|⌉ − 1 < τ·|A| ≤ τ·|A∪B|
     — their Jaccard is strictly below τ. Candidates then verify with
-    the full shingle arrays (array_intersect), exactly like the LSH
-    path's verification.
+    the full shingle arrays (``_verify_jaccard``), exactly like the
+    LSH path.
 
     Why it scales where the plain inverted join doesn't: the join
     fan-out of a shingle is quadratic in its posting-list length, and
@@ -488,39 +542,16 @@ def ngram_jaccard_pairs_prefix(
             F.col(f"b.{id_col}").alias("doc_b"),
         )
         .distinct()
-        .persist()
     )
-    cand_ids = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .unionByName(cand.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-    )
-    cand_sh = (
-        df.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col), shingle_array(col).alias("sh"))
-        .persist()
-    )
-    sa = cand_sh.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = cand_sh.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(common / (F.size("sh_a") + F.size("sh_b") - common), 6),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "jaccard")
+    return _verify_jaccard(df, cand, "doc_a", "doc_b", min_jaccard, col, id_col).select(
+        "doc_a", "doc_b", "jaccard"
     )
 
 
 SIMHASH_BITS = 60  # md5_long yields 60 usable bits
 
 
-def simhash(
-    df: DataFrame, col: str = "text", id_col: str = "doc_id", fan_out: bool = True
-) -> DataFrame:
+def simhash(df: DataFrame, col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """SimHash document signatures: per token occurrence, each of the
     60 hash bits votes +1/-1; bit i of the signature is set when the
     vote is positive.
@@ -535,14 +566,12 @@ def simhash(
     order of magnitude over per-row higher-order ``aggregate()``
     folds, whose lambdas run interpreted per element. Bit-count sums
     are order-independent integers, so the signature is deterministic
-    under any partitioning — which is also what makes the ``fan_out``
-    re-split of an under-partitioned input safe (see
-    operators/partitioning.py).
+    under any partitioning — which is also what makes re-splitting an
+    under-partitioned input first safe (see operators/partitioning.py).
     """
-    if fan_out:
-        from kafka_flink_spark.operators.partitioning import fan_out_narrow
+    from kafka_flink_spark.operators.partitioning import fan_out_narrow
 
-        df = fan_out_narrow(df)
+    df = fan_out_narrow(df)
     # md5 AFTER the explode: as a post-explode column expression the
     # digest runs inside whole-stage codegen rather than interpreted
     # inside a transform() lambda. Measured ~10% on this pass at the
@@ -571,6 +600,38 @@ def simhash(
     return voted.select(F.col(id_col), sig.alias("simhash"))
 
 
+def simhash_chunks(
+    max_hamming: int, num_chunks: int | None = None
+) -> list[tuple[int, int, int]]:
+    """The pigeonhole chunk table of a 60-bit signature: one
+    ``(chunk, offset, mask)`` per disjoint bit range, chunk key =
+    ``(sig >> offset) & mask``. A pair within ``max_hamming`` differs
+    in at most max_hamming bits, so with more chunks than that at
+    least one chunk is bit-identical — an equi-join on equal chunks
+    has FULL recall at the threshold.
+
+    ``num_chunks`` defaults to ``max_hamming + 1`` (the smallest count
+    that keeps the guarantee); passing fewer raises, since it would
+    silently miss pairs between hamming num_chunks and max_hamming.
+    Validation is pure Python, so callers raise before any job runs.
+    Chunk widths differ by at most one bit when 60 % num_chunks != 0.
+    """
+    if num_chunks is None:
+        num_chunks = max_hamming + 1
+    if num_chunks <= max_hamming:
+        raise ValueError(
+            f"num_chunks ({num_chunks}) must exceed max_hamming ({max_hamming}) "
+            "for the pigeonhole recall guarantee"
+        )
+    base, extra = divmod(SIMHASH_BITS, num_chunks)
+    table, offset = [], 0
+    for c in range(num_chunks):
+        width = base + (1 if c < extra else 0)
+        table.append((c, offset, (1 << width) - 1))
+        offset += width
+    return table
+
+
 def simhash_near_pairs(
     df: DataFrame,
     col: str = "text",
@@ -579,51 +640,27 @@ def simhash_near_pairs(
     num_chunks: int | None = None,
     bucket_cap: int | None = 512,
 ) -> DataFrame:
-    """SimHash near-dup pairs via chunk banding (the pigeonhole trick):
-    split the 60-bit signature into ``num_chunks`` disjoint bit ranges;
-    a pair with hamming ≤ max_hamming has at most max_hamming differing
-    bits, so with num_chunks > max_hamming at least one chunk is
-    bit-identical — candidate generation by equi-join on equal chunks
-    has FULL recall at the max_hamming threshold. Join on equal chunk,
-    verify exact hamming with bit_count(xor).
+    """SimHash near-dup pairs via chunk banding (the pigeonhole trick,
+    ``simhash_chunks``): join on equal chunk, verify exact hamming
+    with bit_count(xor) — see :func:`hamming_near_pairs`.
 
-    ``num_chunks`` defaults to ``max_hamming + 1`` (the smallest count
-    that preserves the guarantee); passing fewer raises, since it would
-    silently miss pairs between hamming num_chunks and max_hamming.
-    Chunk widths differ by at most one bit when 60 % num_chunks != 0.
-
-    ``bucket_cap`` (same rationale as minhash_lsh_pairs): a chunk
-    bucket holding > cap DISTINCT signatures — a boilerplate family
-    with near-identical-but-distinct simhashes — routes to a hub STAR
-    (members pair with the bucket's min-rep signature, m−1 linear join
-    rows) instead of all-pairs. Exactly-once emission needs no dedup
-    shuffle: a matching pair's bucket at its FIRST matching chunk is
-    either small (all-pairs path emits there, star's big-filter
-    excludes) or big (star emits iff one side is that bucket's hub) —
-    both paths keep only first-match rows, so the union is disjoint.
-    Recall tradeoff documented: in an oversized bucket only hub-
-    incident pairs survive (cluster connectivity through the hub is
-    preserved; non-hub member pairs are dropped unless they first-
-    match in a small bucket). ``bucket_cap=None`` disables the cap.
+    ``bucket_cap``: a chunk bucket holding > cap DISTINCT signatures —
+    a boilerplate family with near-identical-but-distinct simhashes —
+    routes to a hub STAR (members pair with the bucket's min-rep
+    signature, m−1 linear join rows) instead of all-pairs, bounding
+    the quadratic exactly as in minhash_lsh_pairs. Exactly-once
+    emission needs no dedup shuffle: a matching pair's bucket at its
+    FIRST matching chunk is either small (all-pairs path emits there,
+    star's big-filter excludes) or big (star emits iff one side is
+    that bucket's hub) — both paths keep only first-match rows, so the
+    union is disjoint. Recall tradeoff documented: in an oversized
+    bucket only hub-incident pairs survive (cluster connectivity
+    through the hub is preserved; non-hub member pairs are dropped
+    unless they first-match in a small bucket). ``bucket_cap=None``
+    disables the cap.
     """
-    # Validate banding parameters BEFORE the pin below — an invalid
-    # num_chunks raising after materialization would have burned a
-    # checkpoint job for nothing (ADVICE r5).
-    if num_chunks is not None and num_chunks <= max_hamming:
-        raise ValueError(
-            f"num_chunks ({num_chunks}) must exceed max_hamming ({max_hamming}) "
-            "for the pigeonhole recall guarantee"
-        )
-    # Signatures feed BOTH sides of the bucket self-join; without
-    # pinning Spark recomputes the 60-vote aggregation per side
-    # (exchange reuse doesn't fire across the aliased self-join).
-    # Eager localCheckpoint over the earlier lazy persist: re-measured
-    # in r12 (see minhash_lsh_pairs), the cache race + lineage
-    # re-analysis cost more than the one materialization job. One
-    # long per doc — bounded.
-    sigs = simhash(df, col, id_col).localCheckpoint()
     return hamming_near_pairs(
-        sigs,
+        simhash(df, col, id_col),
         id_col=id_col,
         max_hamming=max_hamming,
         num_chunks=num_chunks,
@@ -641,45 +678,38 @@ def hamming_near_pairs(
 ) -> DataFrame:
     """Chunk-banded near-pair join over ANY 60-bit signature column —
     the engine behind simhash_near_pairs (text) and the perceptual-
-    hash media dedup (m8): pigeonhole candidate generation on
-    num_chunks disjoint bit ranges (full recall at max_hamming when
-    num_chunks > max_hamming), exact bit_count(xor) verification,
+    hash media dedup (m8): pigeonhole candidate generation on the
+    ``simhash_chunks`` table, exact bit_count(xor) verification,
     distinct-signature collapse, and the optional hot-bucket hub-star
-    cap — all exactly as documented on simhash_near_pairs. ``sigs``
-    must hold (id_col, sig_col) with one row per entity; callers
-    should pass a persisted relation (it feeds both self-join sides).
-    Output pair columns are named doc_a/doc_b regardless of domain.
+    cap documented on simhash_near_pairs. ``sigs`` must hold (id_col,
+    sig_col) with one row per entity. Output pair columns are named
+    doc_a/doc_b regardless of domain.
     """
-    if num_chunks is None:
-        num_chunks = max_hamming + 1
-    if num_chunks <= max_hamming:
-        raise ValueError(
-            f"num_chunks ({num_chunks}) must exceed max_hamming ({max_hamming}) "
-            "for the pigeonhole recall guarantee"
-        )
+    chunks = simhash_chunks(max_hamming, num_chunks)
     if sig_col != "simhash":
         sigs = sigs.select(F.col(id_col), F.col(sig_col).alias("simhash"))
+    # The signatures feed the rep table, both member-expansion joins
+    # and the within-group pairs; without a pin each re-runs the
+    # signature pass (exchange reuse doesn't fire across the aliased
+    # joins). Eager localCheckpoint, for the reason given on
+    # _verify_jaccard. One long per entity — bounded.
+    sigs = sigs.localCheckpoint()
     # --- bucket-size guard: collapse identical signatures -----------
-    # Same rationale as minhash_lsh_pairs: a boilerplate mega-cluster
-    # shares one simhash value and would make every chunk bucket
-    # quadratic on a hot key. Chunk-join one representative per
-    # DISTINCT signature; expand group pairs back to doc pairs after.
-    # Bucket size becomes |distinct signatures per chunk key|.
+    # A boilerplate mega-cluster shares one signature value and would
+    # make every chunk bucket quadratic on a hot key. Chunk-join one
+    # representative per DISTINCT signature; expand group pairs back
+    # to doc pairs after. Bucket size becomes |distinct signatures per
+    # chunk key|.
     reps = (
         sigs.groupBy("simhash")
         .agg(F.min(id_col).alias("_rep"), F.count("*").alias("_n"))
-        .localCheckpoint()  # banding + dup-group consumers (r12 pin)
+        .localCheckpoint()  # banding + dup-group consumers
     )
-    base, extra = divmod(SIMHASH_BITS, num_chunks)
-    chunk_cols, start = [], 0
-    for c in range(num_chunks):
-        width = base + (1 if c < extra else 0)
-        mask = (1 << width) - 1
-        chunk_cols.append(F.shiftright("simhash", start).bitwiseAND(F.lit(mask)))
-        start += width
-    chunks = F.array(*chunk_cols)
+    chunk_keys = F.array(
+        *[F.shiftright("simhash", off).bitwiseAND(F.lit(mask)) for _, off, mask in chunks]
+    )
     banded = reps.select(
-        "_rep", "simhash", F.posexplode(chunks).alias("chunk_id", "chunk_key")
+        "_rep", "simhash", F.posexplode(chunk_keys).alias("chunk_id", "chunk_key")
     )
     # A pair sharing several identical chunks matches once per chunk;
     # instead of shuffling the (potentially large) candidate relation
@@ -687,18 +717,11 @@ def hamming_near_pairs(
     # pair's FIRST matching chunk — computable per-row from the two
     # signatures' xor (chunk c matches iff xor has no set bit in c's
     # range), so the dedup is a codegen'd filter with zero exchange.
-    starts = []
-    s = 0
-    for c in range(num_chunks):
-        width = base + (1 if c < extra else 0)
-        starts.append((c, s, (1 << width) - 1))
-        s += width
-
     def first_match(xor_col: Column) -> Column:
         fm = F.lit(None).cast("int")
-        for c, s, mask in reversed(starts):
+        for c, off, mask in reversed(chunks):
             fm = F.when(
-                F.shiftright(xor_col, s).bitwiseAND(F.lit(mask)) == 0, F.lit(c)
+                F.shiftright(xor_col, off).bitwiseAND(F.lit(mask)) == 0, F.lit(c)
             ).otherwise(fm)
         return fm
 
@@ -767,24 +790,9 @@ def hamming_near_pairs(
             "hamming",
         )
     )
-    # Within-group pairs are restricted FIRST to signatures with >1
-    # member (the _n count rides on the reps aggregation for free): the
-    # restriction join's build side is the tiny dup-signature list, so
-    # the common no-duplicates corpus pays nothing here instead of a
-    # corpus-wide self-join on the signature.
-    dup_sigs = reps.filter(F.col("_n") > 1).select("simhash")
-    dup_members = sigs.select(id_col, "simhash").join(dup_sigs, "simhash")
-    wa = dup_members.select("simhash", F.col(id_col).alias("_ida"))
-    wb = dup_members.select("simhash", F.col(id_col).alias("_idb"))
-    within = (
-        wa.join(wb, "simhash")
-        .filter(F.col("_ida") < F.col("_idb"))
-        .select(
-            F.col("_ida").alias("doc_a"),
-            F.col("_idb").alias("doc_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
+    within = _within_group_pairs(
+        sigs.select(id_col, "simhash"), reps, "simhash", id_col
+    ).withColumn("hamming", F.lit(0).cast("int"))
     return cross.unionByName(within)
 
 
@@ -955,29 +963,17 @@ def incremental_dedup(
     inputs; feed it a signature table to skip that). Verification
     re-shingles only candidate docs behind semi joins.
     """
-    rows_per_band = num_perms // num_bands
     sig_e = minhash_signatures(existing, col, id_col, num_perms)
     sig_n = minhash_signatures(new, col, id_col, num_perms)
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                *[
-                    F.col(f"mh{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(num_bands)
-        ]
-    )
+    band_keys = _band_keys(num_perms, num_bands)
 
     def banded(sig: DataFrame, alias: str) -> DataFrame:
         return sig.select(
             F.col(id_col).alias(alias),
-            F.posexplode(band_arr).alias("band_id", "band_key"),
+            F.posexplode(band_keys).alias("band_id", "band_key"),
         )
 
-    bn = banded(sig_n, "new_id").localCheckpoint()  # 2 join uses (r12)
+    bn = banded(sig_n, "new_id").localCheckpoint()  # 2 join uses
     be = banded(sig_e, "_pid")
     cand_e = (
         bn.join(be, ["band_id", "band_key"])
@@ -993,31 +989,14 @@ def incremental_dedup(
         .select("new_id", F.col("_pid").alias("partner"), F.lit(1).alias("ptype"))
         .dropDuplicates(["new_id", "partner"])
     )
-    cand = cand_e.unionByName(cand_n).localCheckpoint()  # 3 consumers (r12)
-
-    # verification shingles only for docs appearing in candidates
-    all_docs = existing.unionByName(new)
-    cand_ids = (
-        cand.select(F.col("new_id").alias(id_col))
-        .unionByName(cand.select(F.col("partner").alias(id_col)))
-        .distinct()
-    )
-    cand_sh = (
-        all_docs.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col), shingle_array(col).alias("sh"))
-        .localCheckpoint()
-    )
-    sa = cand_sh.select(F.col(id_col).alias("new_id"), F.col("sh").alias("sh_a"))
-    sb = cand_sh.select(F.col(id_col).alias("partner"), F.col("sh").alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    verified = (
-        cand.join(sa, "new_id")
-        .join(sb, "partner")
-        .withColumn(
-            "jaccard",
-            F.round(common / (F.size("sh_a") + F.size("sh_b") - common), 6),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
+    verified = _verify_jaccard(
+        existing.unionByName(new),
+        cand_e.unionByName(cand_n),
+        "new_id",
+        "partner",
+        min_jaccard,
+        col,
+        id_col,
     )
     # best partner per new doc: existing beats within-batch, then min id
     best = verified.groupBy("new_id").agg(
@@ -1052,47 +1031,17 @@ def ngram_containment_pairs(
     PARTIAL duplication (one document embedded in a larger one —
     quotation, boilerplate wrapping, page-with-extra-chrome) that
     Jaccard structurally misses: a 100-shingle doc fully contained in
-    a 1000-shingle doc has J≈0.1 but C=1.0. Same inverted-index
-    dataflow as :func:`ngram_jaccard_pairs` (and the same prefix/
-    frequency mitigations apply at scale); only the denominator
-    algebra differs, so both measures ride one shingle join when run
-    together. Emits unordered pairs with both containment and
-    jaccard, thresholded on containment.
+    a 1000-shingle doc has J≈0.1 but C=1.0. Same inverted-index join
+    as :func:`ngram_jaccard_pairs` (``_shingle_overlap``; the same
+    prefix/frequency mitigations apply at scale); only the ratio
+    differs. Emits unordered pairs with both containment and jaccard,
+    thresholded on containment.
     """
-    from pyspark.sql.window import Window
-
-    sr = shingle_rows(df, col, id_col)
-    ex = sr.select(
-        F.col(id_col),
-        F.count("*").over(Window.partitionBy(id_col)).alias("n_sh"),
-        F.col("s"),
-    )
-    a = ex.alias("a")
-    b = ex.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .agg(F.count("*").alias("common"))
-    )
     return (
-        common.withColumn(
+        _shingle_overlap(df, col, id_col)
+        .withColumn(
             "containment",
             F.round(F.col("common") / F.least(F.col("na"), F.col("nb")), 6),
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6
-            ),
         )
         .filter(F.col("containment") >= min_containment)
         .select("doc_a", "doc_b", "containment", "jaccard")

@@ -28,13 +28,23 @@ def fan_out_narrow(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     """Repartition ``df`` to cluster default parallelism iff its
     current partition count is below ``min_fraction`` of it.
 
-    The partition probe (``df.rdd.getNumPartitions()``) runs physical
-    planning but no job. Round-robin repartition is used (not keyed):
-    the goal is core utilization for a narrow stage, and round-robin
-    is the only shape that guarantees balance regardless of key skew.
+    The partition probe runs physical planning but no job. An input
+    that is already a round-robin split (this helper's own output, so
+    calling it twice is free) states its count in the planned physical
+    plan; asking ``df.rdd`` there instead would run the split's
+    shuffle map stage under AQE just to learn that number. Any other
+    input is probed with ``df.rdd.getNumPartitions()``. Round-robin
+    repartition is used (not keyed): the goal is core utilization for
+    a narrow stage, and round-robin is the only shape that guarantees
+    balance regardless of key skew.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(1, int(target * min_fraction)):
+    planned = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if planned.getClass().getSimpleName() == "RoundRobinPartitioning":
+        n = planned.numPartitions()
+    else:
+        n = df.rdd.getNumPartitions()
+    if n >= max(1, int(target * min_fraction)):
         return df
     return df.repartition(target)

@@ -133,6 +133,17 @@ def _ship_package(spark: SparkSession) -> None:
         pass
 
 
+def env_cpus() -> int | None:
+    """``SPARK_GRAFT_CPUS`` when it is a positive integer, else None —
+    a malformed value (``8.0``, empty) falls back to the caller's
+    default instead of crashing the session build or the bench."""
+    try:
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        return None
+    return n if n > 0 else None
+
+
 def get_session(
     app_name: str = "kafka_flink_spark",
     master: str | None = None,
@@ -144,7 +155,7 @@ def get_session(
     ``local[*]``) so the same entry point works for tests and bench.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
+        cpus = env_cpus()
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))

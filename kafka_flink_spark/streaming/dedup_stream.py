@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 
 def _simhash_series(texts: pd.Series) -> pd.Series:
     """Vectorized per-row SimHash, bit-equal to the batch corpus
-    aggregation (operators/dedup.simhash, dedup.py:513): per token
+    aggregation (operators/dedup.simhash): per token
     OCCURRENCE, md5-long (hexdigest[:15] = 60 bits) votes on each bit;
     bit i is set when ones*2 > n_tokens.
 
@@ -131,10 +131,11 @@ def simhash_dedup_stream(
        batch form is a corpus aggregation, the stream form is a
        per-row projection, and both reduce to the same integer
        (property-tested bit-equal);
-    2. chunk banding (the d5 pigeonhole): with num_chunks >
-       max_hamming, a qualifying pair is bit-identical in >= 1 chunk,
-       so candidate checks happen only inside (chunk_id, chunk_key)
-       state groups — the stream never compares all-pairs;
+    2. chunk banding (the d5 pigeonhole, operators/dedup.
+       simhash_chunks): with num_chunks > max_hamming, a qualifying
+       pair is bit-identical in >= 1 chunk, so candidate checks happen
+       only inside (chunk_id, chunk_key) state groups — the stream
+       never compares all-pairs;
     3. ``applyInPandasWithState`` keyed by (chunk_id, chunk_key):
        state = the bucket's (ids, sigs) arrays; arriving rows are
        processed in ``doc_id`` order, each verified against the
@@ -150,7 +151,8 @@ def simhash_dedup_stream(
     State at 100 TB: one long per doc per chunk — signatures only,
     never text. A boilerplate family concentrates one bucket exactly
     like d5's batch join; ``bucket_cap`` is the stream twin of d13's
-    batch hub-star contract (dedup.py:186-270): a (chunk_id,
+    batch hub-star contract (operators/dedup.minhash_lsh_pairs
+    ``bucket_cap``): a (chunk_id,
     chunk_key) state group holds at most ``bucket_cap`` history
     entries; once full, later arrivals verify against the bucket HUB
     (its first == min-id member) ONLY and are NOT appended — per-
@@ -164,15 +166,9 @@ def simhash_dedup_stream(
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from kafka_flink_spark.operators.dedup import SIMHASH_BITS
+    from kafka_flink_spark.operators.dedup import simhash_chunks
 
-    if num_chunks is None:
-        num_chunks = max_hamming + 1
-    if num_chunks <= max_hamming:
-        raise ValueError(
-            f"num_chunks ({num_chunks}) must exceed max_hamming ({max_hamming}) "
-            "for the pigeonhole recall guarantee"
-        )
+    chunks = simhash_chunks(max_hamming, num_chunks)
     if bucket_cap is not None and bucket_cap < 1:
         raise ValueError(f"bucket_cap ({bucket_cap}) must be >= 1 or None")
 
@@ -180,16 +176,11 @@ def simhash_dedup_stream(
 
     sigs = docs.select(F.col(id_col).alias("doc_id"), simhash_py(text_col).alias("sig"))
 
-    base, extra = divmod(SIMHASH_BITS, num_chunks)
-    chunk_exprs, off = [], 0
-    for c in range(num_chunks):
-        width = base + (1 if c < extra else 0)
-        chunk_exprs.append(
-            F.shiftright("sig", off).bitwiseAND(F.lit((1 << width) - 1)).cast("long")
-        )
-        off += width
+    chunk_keys = F.array(
+        *[F.shiftright("sig", off).bitwiseAND(F.lit(mask)) for _, off, mask in chunks]
+    )
     banded = sigs.select(
-        "doc_id", "sig", F.posexplode(F.array(*chunk_exprs)).alias("chunk_id", "chunk_key")
+        "doc_id", "sig", F.posexplode(chunk_keys).alias("chunk_id", "chunk_key")
     )
 
     out_schema = "doc_id long, dup_of long, hamming int"

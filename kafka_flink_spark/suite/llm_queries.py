@@ -4220,9 +4220,8 @@ def m8_perceptual_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # segments the same bytes ahash_media does.
         & (F.length("payload") == F.length(F.decode("payload", "UTF-8")))
     )
-    sigs = ahash_media(media).persist()
     pairs = hamming_near_pairs(
-        sigs, id_col="media_id", sig_col="ahash", max_hamming=6, bucket_cap=None
+        ahash_media(media), id_col="media_id", sig_col="ahash", max_hamming=6, bucket_cap=None
     )
     return pairs.select(
         F.col("doc_a").alias("media_a"),

@@ -1501,7 +1501,7 @@ def _w33_oracle() -> str:
     the history, later arrivals verify against the hub (rn=1) only.
     Pair (a < b) emits iff b still joined the history (b.rn <= cap,
     all earlier members visible) OR a is the hub."""
-    from kafka_flink_spark.operators.dedup import SIMHASH_BITS
+    from kafka_flink_spark.operators.dedup import SIMHASH_BITS, simhash_chunks
     from kafka_flink_spark.suite.llm_queries import _md5l
 
     terms = " + ".join(
@@ -1509,17 +1509,11 @@ def _w33_oracle() -> str:
         f"THEN 1 ELSE -1 END)) > 0 THEN (CAST(1 AS BIGINT) << {i}) ELSE 0 END)"
         for i in range(SIMHASH_BITS)
     )
-    num_chunks = 7
-    base, extra = divmod(SIMHASH_BITS, num_chunks)
-    chunk_selects, off = [], 0
-    for c in range(num_chunks):
-        width = base + (1 if c < extra else 0)
-        chunk_selects.append(
-            f"SELECT doc_id, simhash, {c} AS chunk_id, "
-            f"((simhash >> {off}) & {(1 << width) - 1}) AS chunk_key FROM sig"
-        )
-        off += width
-    banded = "\n    UNION ALL ".join(chunk_selects)
+    banded = "\n    UNION ALL ".join(
+        f"SELECT doc_id, simhash, {c} AS chunk_id, "
+        f"((simhash >> {off}) & {mask}) AS chunk_key FROM sig"
+        for c, off, mask in simhash_chunks(max_hamming=6)
+    )
     tok_hash = _md5l("t")
     return f"""
 WITH docs_all AS (

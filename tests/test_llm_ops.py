@@ -51,6 +51,10 @@ def test_simhash_near_pairs(spark):
     }
     assert pairs[(1, 4)] == 0
     assert (1, 2) in pairs and pairs[(1, 2)] <= 20
+    # num_chunks <= max_hamming breaks the pigeonhole guarantee: raise
+    # before any job runs
+    with pytest.raises(ValueError, match="must exceed max_hamming"):
+        D.simhash_near_pairs(_docs(spark), max_hamming=6, num_chunks=6)
 
 
 def test_lsh_mega_cluster_bucket_bounded(spark):
@@ -361,6 +365,12 @@ def test_lsh_pairs_subset_of_exact_pairs(spark):
     assert lsh <= exact
     if exact:
         assert len(lsh) / len(exact) >= 0.5, (len(lsh), len(exact))
+    # prefix filtering is lossless: the same set as the exact join
+    prefix = {
+        (r["doc_a"], r["doc_b"])
+        for r in D.ngram_jaccard_pairs_prefix(docs, min_jaccard=0.5).collect()
+    }
+    assert prefix == exact
 
 
 def test_multiprobe_recall_dominates_single_bucket(spark):
@@ -1660,6 +1670,8 @@ def test_ahash_block_locality_and_banding(spark):
     assert pairs[(0, 2)] == 0
     assert pairs[(0, 1)] == ham01 and pairs[(1, 2)] == ham01
     assert not any(3 in k for k in pairs)
+    with pytest.raises(ValueError, match="must exceed max_hamming"):
+        hamming_near_pairs(sigs, id_col="media_id", sig_col="ahash", max_hamming=6, num_chunks=3)
 
 
 def test_d13_family_engages_star_path(spark):

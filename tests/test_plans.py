@@ -325,14 +325,15 @@ def test_lateral_decorrelates_to_window(spark):
 def test_minhash_signatures_single_exchange(spark):
     """Dedup scale contract: signature computation is one narrow
     shingle-explode stage + one partial-aggregated exchange of 17
-    longs per doc — shingle strings never shuffle. (fan_out=False:
-    the adaptive re-split for sub-splittable inputs is pinned
-    separately below.)"""
+    longs per doc — shingle strings never shuffle. Counted above an
+    input already split to default parallelism, where the adaptive
+    re-split (pinned separately below) is a no-op."""
     from kafka_flink_spark.operators.dedup import minhash_signatures
 
     spark.catalog.clearCache()  # a prior d3 run leaves sigs cached
     docs = load_table(spark, SF_SMALL, "documents")
-    assert count_exchanges(minhash_signatures(docs, fan_out=False)) == 1
+    split = docs.repartition(spark.sparkContext.defaultParallelism)
+    assert count_exchanges(minhash_signatures(split)) - count_exchanges(split) == 1
 
 
 def test_fan_out_narrow_splits_only_underpartitioned_input(spark):

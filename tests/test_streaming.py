@@ -1190,6 +1190,8 @@ def test_simhash_dedup_stream_flags_history_matches_only(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
+        with pytest.raises(ValueError, match="must exceed max_hamming"):
+            simhash_dedup_stream(stream, max_hamming=6, num_chunks=6)
         out = run_available_now(simhash_dedup_stream(stream), "update").toPandas()
         per_doc = out.groupby("doc_id")["dup_of"].min().to_dict()
         assert 1 not in per_doc  # first arrival is never a dup
